@@ -187,7 +187,7 @@ class BuildStats:
 _MS_MAX_V = {1: 1 << 22, 2: 1024, 3: 256, 4: 64}
 _MS_BLOCK_CELLS = 4 << 20  # rows x pair-block float64 cells per matmul slice
 _MS_BLAS_ADVANTAGE = 8  # matmul flops are ~this much cheaper than gather cells
-_MS_EXACT_CAP = float(1 << 52)  # float64 integer-exactness guard
+_MS_EXACT_CAP = 1 << 52  # float64 integer-exactness guard
 
 
 def multiset_fold(
@@ -204,10 +204,6 @@ def multiset_fold(
     sorting each, and folding duplicates — the identity the enumeration
     kernels compute; equality is pinned by tests/test_motif_kernels.py.
     """
-    import os
-
-    if os.environ.get("EHS_DISABLE_MSFOLD"):  # ops escape hatch / A-B timing
-        return None
     if vmax is None or k not in _MS_MAX_V:
         return None
     V = int(vmax) + 1
@@ -225,7 +221,7 @@ def multiset_fold(
 
     uls, ucnts = np.unique(lengths, return_counts=True)
     total_int = sum(int(c) * _comb(int(L), k) for L, c in zip(uls, ucnts))
-    if total_int >= (1 << 52):
+    if total_int >= _MS_EXACT_CAP:
         return None
     total_combs = float(total_int)
     npairs = V * (V - 1) // 2
@@ -239,7 +235,9 @@ def multiset_fold(
             return None
 
     if k == 1:
-        cnt = np.bincount(tokens_flat, minlength=V)
+        # only the offsets window: a sliced Arrow column keeps its parent's
+        # whole values buffer
+        cnt = np.bincount(tokens_flat[offsets[0] : offsets[-1]], minlength=V)
         nz = np.flatnonzero(cnt)
         return nz[:, None].astype(np.int64), cnt[nz].astype(np.int64)
 

@@ -497,15 +497,15 @@ def _bucket_pair_join(
 
     Plan — ONE LINEAR CHAIN, deliberately: groupBy(bh) + sorted
     collect_list, drop singleton buckets, explode each bucket into its
-    block cells, rebalance the (tiny) cell rows, expand pairs JVM-side
-    with nested array transforms, distinct.  Spark does not reliably
-    reuse a shuffle exchange consumed by two subtrees (measured: a
-    cold/hot branch-and-union formulation recomputed the signature
-    pipeline up to 5x — 17 parquet scans in the executed plan — and a
-    self-join formulation shuffles AND sorts both 14M-row sides at the
-    1M-doc tier, ~3x this plan's candidate-stage wall), so every
-    intermediate here has exactly one consumer and pair expansion never
-    joins.
+    block cells, rebalance the (tiny) cell rows, stream each cell's pairs
+    JVM-side (posexplode one side, explode its partner slice), distinct.
+    Spark does not reliably reuse a shuffle exchange consumed by two
+    subtrees (measured: a cold/hot branch-and-union formulation
+    recomputed the signature pipeline up to 5x — 17 parquet scans in the
+    executed plan — and a self-join formulation shuffles AND sorts both
+    14M-row sides at the 1M-doc tier, ~3x this plan's candidate-stage
+    wall), so every intermediate here has exactly one consumer and pair
+    expansion never joins.
 
     Hot buckets (> hot_bucket_docs docs) are the skew case: expanding a
     bucket's m^2/2 pairs in its aggregation task would stall the stage.

@@ -2,15 +2,26 @@
 `obtain_enriched_configurations` (src/count_gpu_extract.jl:203-250) and its
 partitioned variant (src/partition.jl:253-345).
 
-Plan shape:
+Plan shape (enriched_configurations, and motif_counts' classic plan):
 
     input DataFrame (doc_id, tokens[, positions, weights], n_tok, source)
       └─ filter(n_tok >= k)                       # Catalyst, pushed to scan
       └─ mapInArrow(build kernel)  ── no shuffle ─→ one CMS blob per task
-      └─ treeReduce(+)                            # fixed-size blobs only
+      └─ merge(+)           # driver collect (<= 256 tasks) or treeReduce
       └─ broadcast(merged CMS)
       └─ mapInArrow(extract kernel) ── no shuffle ─→ occurrence rows
            (m1..mk[, d12.., start, end], doc_id, contribution, count)
+
+motif_counts' classic plan swaps the extract kernel for a map-side
+aggregating one, then groupBy + orderBy.  Its fused plan (small alphabet,
+k <= 4, no positions/weights) is one Spark job:
+
+    filter(n_tok >= k)
+      └─ mapInArrow(build kernel + multiset fold) ─→ (CMS blob, folded
+           (key, occurrences) partial) per task
+      └─ collect; driver merges the blobs, folds the partials, estimates,
+           filters by min_count and sorts, all in numpy
+      └─ LocalRelation (m1..mk, count, n_occurrences, total_contribution)
 
 Because selection runs against the fully merged global sketch, the
 reference's cross-partition under-count caveat (src/partition.jl:271-287,
@@ -55,7 +66,8 @@ from .sketch_build import build_sketch_checkpointed, build_sketch_distributed
 #: init once — reused workers otherwise re-decompress + re-widen the same
 #: parity-width table, ~25 ms per task at w=272k).  Keyed by a blake2b of
 #: the blob bytes, so only byte-identical payloads ever share an entry;
-#: entries are READ-ONLY by contract (estimate-only callers).  Bounded to
+#: entries are shared, so their tables are marked read-only: an in-place
+#: update raises instead of corrupting other tasks' estimates.  Bounded to
 #: a handful of sketches; lives in an importable module so worker reuse
 #: (spark.python.worker.reuse) keeps it across tasks and jobs.
 _DECODED_CMS_CACHE: dict = {}
@@ -73,6 +85,7 @@ def _decode_cms_cached(blob: bytes) -> CountMinSketch:
         while len(_DECODED_CMS_CACHE) >= _DECODED_CMS_CACHE_MAX:
             _DECODED_CMS_CACHE.pop(next(iter(_DECODED_CMS_CACHE)))
         sk = _DECODED_CMS_CACHE[key] = _fb(blob)
+        sk.table.flags.writeable = False
     return sk
 
 
@@ -348,59 +361,53 @@ def _fused_summary_result(
     cms: CountMinSketch,
     partials: list,
 ) -> DataFrame:
-    """Driver-side finish of the fused plan: fold the per-task partials
-    (a few thousand keys), attach the merged-sketch estimates, filter by
-    min_count, and return the same schema/order as the classic plan."""
+    """Driver-side finish of the fused plan, all in numpy: fold the
+    per-task partials (a few thousand keys), attach the merged-sketch
+    estimates and filter by min_count.
+
+    Order contract: rows are sorted by (count desc, m1..mk asc), exactly
+    the classic plan's ``orderBy(desc("count"), m1..mk)``, by np.lexsort
+    here instead of a Spark sort.  A ``pa.Table`` always converts through
+    Arrow, whatever the session's Arrow conf; below
+    ``spark.sql.execution.arrow.localRelationThreshold`` it becomes a
+    LocalRelation, so collect/toPandas/limit keep this order and run no
+    Spark job (above it, an RDD relation: slower, same rows)."""
     import struct as _struct
 
     from ..functions.motif_kernels import _fold_keys
 
     k = cfg.motif_size
     hsz = _struct.calcsize("<qi")
-    kparts, oparts = [], []
+    kparts, oparts = [np.empty((0, k), np.int64)], [np.empty(0, np.int64)]
     for blob in partials:
         n, kk = _struct.unpack("<qi", blob[:hsz])
         if kk != k:
             raise ValueError(f"partial key width {kk} != {k}")
-        if n:
-            kparts.append(
-                np.frombuffer(blob, dtype=np.int64, count=n * k, offset=hsz).reshape(n, k)
-            )
-            oparts.append(
-                np.frombuffer(blob, dtype=np.int64, count=n, offset=hsz + n * k * 8)
-            )
-    spark = df.sparkSession
-    tok_field = df.schema[cfg.tokens_col].dataType.elementType
-    fields = [StructField(f"m{i+1}", tok_field, False) for i in range(k)]
-    fields += [
-        StructField("count", LongType(), False),
-        StructField("n_occurrences", LongType(), False),
-        StructField("total_contribution", DoubleType(), False),
-    ]
-    schema = StructType(fields)
-    if kparts:
-        ukeys, uocc, _ = _fold_keys(
-            np.concatenate(kparts), k, occ_weights=np.concatenate(oparts)
+        kparts.append(
+            np.frombuffer(blob, dtype=np.int64, count=n * k, offset=hsz).reshape(n, k)
         )
-        est = cms.estimate(ukeys)
-        m = est >= cfg.min_count
-        ukeys, uocc, est = ukeys[m], uocc[m], est[m]
-    else:
-        ukeys = np.empty((0, k), np.int64)
-        uocc = est = np.empty(0, np.int64)
-    import pandas as pd
-
-    tok_np = {"integer": np.int32, "long": np.int64, "short": np.int16}.get(
-        tok_field.typeName(), np.int64
+        oparts.append(np.frombuffer(blob, dtype=np.int64, count=n, offset=hsz + n * k * 8))
+    ukeys, uocc, csum = _fold_keys(
+        np.concatenate(kparts), k, occ_weights=np.concatenate(oparts)
     )
-    cols = {f"m{i+1}": ukeys[:, i].astype(tok_np) for i in range(k)}
-    cols["count"] = est.astype(np.int64)
-    cols["n_occurrences"] = uocc.astype(np.int64)
-    cols["total_contribution"] = uocc.astype(np.float64) * float(k)
-    # pandas + Arrow conversion: columnar, no per-row pickling
-    out = spark.createDataFrame(pd.DataFrame(cols), schema=schema)
-    keys = [f"m{i+1}" for i in range(k)]
-    return out.orderBy(F.desc("count"), *keys)
+    est = cms.estimate(ukeys)
+    sel = np.flatnonzero(est >= cfg.min_count)
+    sel = sel[np.lexsort([*ukeys[sel].T[::-1], -est[sel]])]  # last key is primary
+    cols = {f"m{i+1}": ukeys[sel, i] for i in range(k)}
+    cols["count"] = est[sel]
+    cols["n_occurrences"] = uocc[sel]
+    cols["total_contribution"] = csum[sel]
+    tok_field = df.schema[cfg.tokens_col].dataType.elementType
+    schema = StructType(
+        [StructField(f"m{i+1}", tok_field, False) for i in range(k)]
+        + [
+            StructField("count", LongType(), False),
+            StructField("n_occurrences", LongType(), False),
+            StructField("total_contribution", DoubleType(), False),
+        ]
+    )
+    # the Arrow cast against `schema` narrows m1..mk to the token type
+    return df.sparkSession.createDataFrame(pa.table(cols), schema=schema)
 
 
 def motif_counts(
@@ -438,11 +445,13 @@ def motif_counts(
         # fused single-scan plan: the build pass piggybacks each task's
         # folded (key, occurrence) partials when the multiset-counting
         # path is active, so the second data pass disappears — the driver
-        # finishes the aggregation over a few thousand folded rows.
-        # Results are identical to the two-pass plan (pytest-pinned);
-        # tasks that fall back to enumeration (large alphabet) or exceed
-        # the partial byte cap degrade gracefully to the classic second
-        # pass against the already-merged sketch.
+        # folds, filters and sorts the few thousand folded rows in numpy
+        # and returns them as a local relation (_fused_summary_result),
+        # so the scan is the call's only Spark job.  Rows and their order
+        # are identical to the two-pass plan (pytest-pinned); tasks that
+        # fall back to enumeration (large alphabet) or exceed the partial
+        # byte cap degrade to the classic second pass against the
+        # already-merged sketch.
         prepared = _prepared(df, cfg, conv=False, with_weights=False)
         # the fused path collects one (blob, partial) row per task; beyond
         # the classic collect threshold the blobs go through treeReduce

@@ -242,6 +242,10 @@ class CountMinSketch(MergeableSketch):
         vmax: int | None = None,
     ) -> None:
         """Add `counts[i]` (default 1) occurrences of each key row."""
+        if not self.table.flags.writeable:
+            # checked here because ufunc.at (the sparse and conservative
+            # paths) writes through the read-only flag on numpy 1.x
+            raise ValueError("update_batch on a read-only CMS table")
         keys = np.asarray(keys)
         if keys.ndim == 1:
             keys = keys[:, None]

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -28,3 +29,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn) -> (fn(), number of Spark jobs fn started)``,
+    counted by the status tracker under a fresh job group."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-started-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count probe", False)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the tracker through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

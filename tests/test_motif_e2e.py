@@ -151,3 +151,66 @@ class TestFusedSummaryPlan:
             sa = a.sort_values(cols).reset_index(drop=True)
             sb = b.sort_values(cols).reset_index(drop=True)
             assert sa.equals(sb), f"k={k}: fused != classic"
+
+    def _fused_plan(self, df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Exchange" not in plan, plan
+
+    def test_fused_order_matches_classic(self, spark, sf_dir):
+        """The fused finish orders rows on the driver; collect must return
+        the classic plan's orderBy(desc(count), m1..mk) row for row, not
+        merely the same set of rows."""
+        from epichypersketch_jl_spark.operators.motif import motif_counts
+        from epichypersketch_jl_spark.sources.tables import tokenized_sequences
+
+        seq = tokenized_sequences(spark, sf_dir)
+        for k, mc in [(1, 2), (2, 2), (3, 2), (2, 10**9)]:
+            cfg = HyperSketchConfig(motif_size=k, min_count=mc, seed=1)
+            fused = motif_counts(seq, cfg)
+            self._fused_plan(fused)
+            a = fused.collect()
+            assert a == motif_counts(seq, cfg, fused=False).collect(), (k, mc)
+            assert (len(a) > 0) == (mc == 2), (k, mc, len(a))
+        # every task's partial is empty
+        empty = seq.filter("n_tok < 0")
+        fused = motif_counts(empty, cfg)
+        self._fused_plan(fused)
+        assert fused.collect() == motif_counts(empty, cfg, fused=False).collect() == []
+
+    def test_fused_collect_starts_no_job(self, spark, sf_dir, jobs_started):
+        """The fused call's only Spark job is its scan; the result is a
+        local relation, so reading it back starts none."""
+        from epichypersketch_jl_spark.operators.motif import motif_counts
+        from epichypersketch_jl_spark.sources.tables import tokenized_sequences
+
+        seq = tokenized_sequences(spark, sf_dir)
+        cfg = HyperSketchConfig(motif_size=2, min_count=2, seed=1)
+        fused, n_call = jobs_started(lambda: motif_counts(seq, cfg))
+        assert n_call == 1  # the scan
+        rows, n = jobs_started(fused.collect)
+        assert rows and n == 0
+        assert jobs_started(lambda: fused.limit(5).collect())[1] == 0
+        assert jobs_started(fused.toPandas)[1] == 0
+        # control: the classic plan's result does run jobs when collected
+        classic = motif_counts(seq, cfg, fused=False)
+        assert jobs_started(classic.collect)[1] >= 1
+
+    @pytest.mark.parametrize("arrow", ["true", "false"])
+    def test_fused_plan_ignores_arrow_conf(self, spark, sf_dir, arrow):
+        """The fused result is a LocalTableScan with no Exchange whatever
+        spark.sql.execution.arrow.pyspark.enabled says."""
+        from epichypersketch_jl_spark.operators.motif import motif_counts
+        from epichypersketch_jl_spark.sources.tables import tokenized_sequences
+
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        before = spark.conf.get(key, None)
+        spark.conf.set(key, arrow)
+        try:
+            seq = tokenized_sequences(spark, sf_dir)
+            cfg = HyperSketchConfig(motif_size=2, min_count=2, seed=1)
+            self._fused_plan(motif_counts(seq, cfg))
+        finally:
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)

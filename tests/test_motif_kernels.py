@@ -396,11 +396,52 @@ class TestMultisetFold:
             got = {tuple(kk): int(cc) for kk, cc in zip(keys, cnt)}
             assert got == dict(ref), (trial, k, V)
 
+    def test_sliced_columns_match_bruteforce(self, monkeypatch):
+        """A sliced Arrow list column keeps its parent's values buffer, so
+        the offsets window (offsets[0] > 0, offsets[-1] < len(values)) is
+        the only view of the rows; no k may count tokens outside it."""
+        from collections import Counter
+
+        import epichypersketch_jl_spark.functions.motif_kernels as mk
+
+        # force-engage the fold so tiny batches still take its arithmetic
+        monkeypatch.setattr(mk, "_MS_BLAS_ADVANTAGE", float("inf"))
+        flat, off = list_column_to_numpy(
+            pa.array([[1, 2], [3, 3], [4, 5, 6]], type=pa.list_(pa.int32())).slice(1, 1)
+        )
+        keys, cnt = mk.multiset_fold(flat, off, 1, int(flat.max()))
+        assert {tuple(kk): int(c) for kk, c in zip(keys, cnt)} == {(3,): 2}
+
+        rng = np.random.default_rng(23)
+        rows = [rng.integers(0, 9, size=int(n)).tolist() for n in rng.integers(0, 12, 40)]
+        parent = pa.array(rows, type=pa.list_(pa.int32()))
+        for k in (1, 2, 3, 4):
+            for start, length in ((0, 40), (5, 20), (17, 1), (39, 1), (12, 0)):
+                flat, off = list_column_to_numpy(parent.slice(start, length))
+                ref = Counter()
+                for r in rows[start : start + length]:
+                    ref.update(combinations(sorted(r), k))
+                res = mk.multiset_fold(flat, off, k, int(flat.max()))
+                assert res is not None, (k, start, length)
+                got = {tuple(kk): int(c) for kk, c in zip(*res)}
+                assert got == dict(ref), (k, start, length)
+
+    def test_exactness_gate_uses_named_cap(self, monkeypatch):
+        """The float64 exactness gate reads _MS_EXACT_CAP: lowering the cap
+        below the batch's combination total sends it to enumeration."""
+        import epichypersketch_jl_spark.functions.motif_kernels as mk
+
+        monkeypatch.setattr(mk, "_MS_BLAS_ADVANTAGE", float("inf"))
+        flat, off = _ragged([[1, 2, 3], [2, 2, 4]])  # 6 pairs in total
+        assert mk.multiset_fold(flat, off, 2, 4) is not None
+        monkeypatch.setattr(mk, "_MS_EXACT_CAP", 6)
+        assert mk.multiset_fold(flat, off, 2, 4) is None
+
     def test_kernel_paths_identical(self, monkeypatch):
         """build_batch/aggregate_batch produce byte-identical sketches and
-        aggregates with the counting path on and off (EHS_DISABLE_MSFOLD)."""
-        import os
-
+        aggregates with the counting path on and off (multiset_fold
+        patched to always decline)."""
+        import epichypersketch_jl_spark.functions.motif_kernels as motif_kernels
         from epichypersketch_jl_spark.config import HyperSketchConfig
         from epichypersketch_jl_spark.functions.motif_kernels import (
             aggregate_batch,
@@ -414,28 +455,27 @@ class TestMultisetFold:
         flat = rng.integers(1, 20, size=int(lens.sum())).astype(np.int32)
         for k in (1, 2, 3, 4):
             cfg = HyperSketchConfig(motif_size=k, min_count=2, seed=42)
-            outs = []
-            for disable in ("", "1"):
-                if disable:
-                    monkeypatch.setenv("EHS_DISABLE_MSFOLD", disable)
-                else:
-                    monkeypatch.delenv("EHS_DISABLE_MSFOLD", raising=False)
+
+            def run():
                 cms = make_cms(cfg, conv=False)
                 build_batch(cms, flat, offsets, cfg)
                 keys, occ, csum, est = aggregate_batch(cms, flat, offsets, cfg)
                 order = np.lexsort(keys.T[::-1])
-                outs.append(
-                    (cms.to_bytes(), keys[order], occ[order], csum[order], est[order])
-                )
-            a, b = outs
+                return cms.to_bytes(), keys[order], occ[order], csum[order], est[order]
+
+            a = run()
+            with monkeypatch.context() as mp:
+                mp.setattr(motif_kernels, "multiset_fold", lambda *a, **kw: None)
+                b = run()
             assert a[0] == b[0], f"k={k}: sketch bytes differ"
             for i in range(1, 5):
                 assert np.array_equal(a[i], b[i]), f"k={k}: aggregate field {i} differs"
 
-    def test_conservative_build_keeps_enumeration(self):
+    def test_conservative_build_keeps_enumeration(self, monkeypatch):
         """CU is fold-granularity-sensitive; the counting path must not
         engage for conservative sketches (table equality with the
         enumeration path is the invariant the CU oracles pin)."""
+        import epichypersketch_jl_spark.functions.motif_kernels as motif_kernels
         from epichypersketch_jl_spark.config import HyperSketchConfig
         from epichypersketch_jl_spark.functions.motif_kernels import (
             build_batch,
@@ -447,14 +487,10 @@ class TestMultisetFold:
         offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
         flat = rng.integers(1, 8, size=int(lens.sum())).astype(np.int32)
         cfg = HyperSketchConfig(motif_size=2, min_count=1, seed=42, conservative=True)
-        import os
 
         cms_a = make_cms(cfg, conv=False)
         build_batch(cms_a, flat, offsets, cfg)
-        os.environ["EHS_DISABLE_MSFOLD"] = "1"
-        try:
-            cms_b = make_cms(cfg, conv=False)
-            build_batch(cms_b, flat, offsets, cfg)
-        finally:
-            del os.environ["EHS_DISABLE_MSFOLD"]
+        monkeypatch.setattr(motif_kernels, "multiset_fold", lambda *a, **kw: None)
+        cms_b = make_cms(cfg, conv=False)
+        build_batch(cms_b, flat, offsets, cfg)
         assert cms_a.to_bytes() == cms_b.to_bytes()

@@ -64,11 +64,11 @@ class TestPlanShapes:
         out = motif_counts(seq, cfg)
         plan = _plan(out)
         if "MapInArrow" not in plan and "PythonMapInArrow" not in plan:
-            # fused single-scan plan: the aggregation finished driver-side
-            # over the build pass's folded partials — the remaining plan is
-            # a local result + the ordering sort, at most one Exchange
-            assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan, plan
-            assert plan.count("Exchange") <= 1, plan
+            # fused single-scan plan: the aggregation and the ordering
+            # finished driver-side over the build pass's folded partials —
+            # the remaining plan is a local relation, no shuffle at all
+            assert "LocalTableScan" in plan, plan
+            assert "Exchange" not in plan, plan
         else:
             assert plan.count("Exchange") <= 2, plan
             kernel_sub = plan[plan.find("MapInArrow"):]

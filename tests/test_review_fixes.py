@@ -174,3 +174,33 @@ class TestRound3ReviewFixes:
         df = spark.createDataFrame([], "value: long").filter("value > 0")
         out = hll_distinct(df, "value").toPandas()
         assert len(out) == 1 and out.approx_distinct.iloc[0] == 0
+
+
+class TestDecodedCmsCacheReadOnly:
+    def test_cached_sketch_rejects_mutation(self, monkeypatch):
+        """Every task in a reused worker shares one decoded sketch per
+        blob; an in-place update must raise rather than silently shift
+        the other tasks' estimates, and estimate must keep working."""
+        from epichypersketch_jl_spark.operators import motif
+
+        monkeypatch.setattr(motif, "_DECODED_CMS_CACHE", {})
+        cms = CountMinSketch(delta=0.01, epsilon=0.01, key_width=2, seed=3)
+        keys = np.array([[1, 2], [3, 4], [1, 2]], dtype=np.int64)
+        cms.update_batch(keys)
+        blob = cms.to_bytes()
+        cached = motif._decode_cms_cached(blob)
+        assert motif._decode_cms_cached(blob) is cached
+        before = cached.table.copy()
+
+        with pytest.raises(ValueError, match="read-only"):
+            cached.update_batch(keys)  # sparse scatter-add path
+        dense = np.repeat(keys, cached.width, axis=0)
+        with pytest.raises(ValueError, match="read-only"):
+            cached.update_batch(dense)  # dense bincount path
+        with pytest.raises(ValueError, match="read-only"):
+            cached.merge_inplace(cms)
+        with pytest.raises(ValueError, match="read-only"):
+            cached.table[0, 0] = 7
+
+        assert np.array_equal(cached.table, before)
+        assert cached.estimate(keys).tolist() == cms.estimate(keys).tolist() == [2, 1, 2]
