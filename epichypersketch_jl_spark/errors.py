@@ -16,3 +16,9 @@ class InputError(HyperSketchError):
 
 class MergeError(HyperSketchError):
     """Attempt to merge incompatible sketches (different seed/shape/params)."""
+
+
+class BlobError(HyperSketchError, ValueError):
+    """A serialized sketch blob (or a checkpoint row holding one) is
+    malformed: wrong magic, unknown or unexpected tag, or a declared payload
+    length that disagrees with the bytes present (truncated or padded)."""

@@ -15,9 +15,11 @@ explicit `+` over seed-aligned sketches is what buys:
     completed buckets are skipped on re-run (north_rule requirement).
 
 Scale notes (1000-executor / 100 TB): the build is map-only; the reduction is
-`treeReduce` over ~#tasks blobs with depth 2 (fan-in ~sqrt(tasks)); the
-checkpointed path shuffles only (bucket, row) once and writes blobs, so a
-resume re-reads no completed input.
+`treeReduce` over ~#tasks blobs with depth 2 (fan-in ~sqrt(tasks)).  The
+checkpointed path moves rows through one exchange pinned at n_buckets
+partitions, so the bucket builds run as wide as the plain build; a resume
+reads the checkpoint's blobs in one job and re-reads no completed input.
+Both paths end in the same driver merge (`merge_blobs`).
 """
 
 from __future__ import annotations
@@ -27,7 +29,8 @@ from typing import Callable, Iterator
 
 import pyarrow as pa
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -38,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..errors import BlobError
 from ..sketches.base import MergeableSketch, from_bytes
 
 # update_fn(sketch, record_batch, stats_dict) -> None; mutates sketch in place.
@@ -74,28 +78,46 @@ def merge_blob_bytes(a: bytes, b: bytes) -> bytes:
     return sk.merge(from_bytes(b)).to_bytes()
 
 
-def _make_build_fn(zero_fn: Callable[[], MergeableSketch], update_fn: UpdateFn, part_id_fn=None):
+def merge_blobs(blobs: list[bytes], zero_fn: Callable[[], MergeableSketch]) -> MergeableSketch:
+    """The driver merge both builders end in: CMS decodes every blob into one
+    int64 accumulator (`merge_blobs_inplace`); other sketches fold `merge`."""
+    if not blobs:
+        return zero_fn()
+    sk = from_bytes(blobs[0])
+    bulk = getattr(sk, "merge_blobs_inplace", None)
+    if bulk is not None:
+        return bulk(blobs[1:])
+    for b in blobs[1:]:
+        sk = sk.merge(from_bytes(b))
+    return sk
+
+
+def _build_blob(part_id: int, batches, zero_fn, update_fn: UpdateFn) -> pa.RecordBatch:
+    """One task's sketch over `batches`, as a one-row BLOB_SCHEMA batch."""
+    t0 = time.monotonic()
+    sk = zero_fn()
+    stats = {"n_rows": 0, "n_tokens": 0, "n_updates": 0}
+    for b in batches:
+        update_fn(sk, b, stats)
+    return pa.RecordBatch.from_pydict(
+        {
+            "part_id": [part_id],
+            "sketch": [sk.to_bytes()],
+            "n_rows": [stats["n_rows"]],
+            "n_tokens": [stats["n_tokens"]],
+            "n_updates": [stats["n_updates"]],
+            "wall_ms": [(time.monotonic() - t0) * 1000.0],
+        },
+        schema=_BLOB_ARROW_SCHEMA,
+    )
+
+
+def _make_build_fn(zero_fn: Callable[[], MergeableSketch], update_fn: UpdateFn):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        t0 = time.monotonic()
-        sk = zero_fn()
-        stats = {"n_rows": 0, "n_tokens": 0, "n_updates": 0}
-        for b in batches:
-            update_fn(sk, b, stats)
         ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": [pid],
-                "sketch": [sk.to_bytes()],
-                "n_rows": [stats["n_rows"]],
-                "n_tokens": [stats["n_tokens"]],
-                "n_updates": [stats["n_updates"]],
-                "wall_ms": [(time.monotonic() - t0) * 1000.0],
-            },
-            schema=_BLOB_ARROW_SCHEMA,
-        )
+        yield _build_blob(ctx.partitionId() if ctx is not None else -1, batches, zero_fn, update_fn)
 
     return fn
 
@@ -121,26 +143,8 @@ def build_sketch_distributed(
     n_parts = df.rdd.getNumPartitions()
     if n_parts <= collect_threshold:
         rows = out.collect()  # single job
-        if not rows:
-            return zero_fn(), []
-        sk = from_bytes(bytes(rows[0].sketch))
-        # blob-level fast path (CMS): decode straight into the accumulator,
-        # no per-blob widening copy; the bulk variant overlaps decompression
-        # across blobs (threaded — zlib releases the GIL)
-        bulk = getattr(sk, "merge_blobs_inplace", None)
-        fast = getattr(sk, "merge_blob_inplace", None)
-        if bulk is not None:
-            bulk(bytes(r.sketch) for r in rows[1:])
-        else:
-            for r in rows[1:]:
-                if fast is not None:
-                    fast(bytes(r.sketch))
-                elif hasattr(sk, "merge_inplace"):
-                    sk = sk.merge_inplace(from_bytes(bytes(r.sketch)))
-                else:
-                    sk = sk.merge(from_bytes(bytes(r.sketch)))
-        metrics = [{k: v for k, v in r.asDict().items() if k != "sketch"} for r in rows]
-        return sk, metrics
+        sk = merge_blobs([bytes(r.sketch) for r in rows], zero_fn)
+        return sk, [{k: v for k, v in r.asDict().items() if k != "sketch"} for r in rows]
     out = out.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         blob_rdd = out.select("sketch").rdd.map(lambda r: bytes(r[0]))
@@ -180,6 +184,25 @@ def delete_dir(spark, path: str) -> None:
     fs.delete(hpath, True)
 
 
+def _read_checkpoint(spark, checkpoint_dir: str) -> dict:
+    """{bucket: blob row} of checkpoint_dir in one job (the explicit schema
+    skips footer inference); a bucket appended twice keeps its smallest
+    wall_ms.  Only a missing directory reads as empty; anything else raises."""
+    try:
+        rows = spark.read.schema(BLOB_SCHEMA).parquet(checkpoint_dir).collect()
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return {}
+        raise
+    best: dict = {}
+    for r in rows:
+        if any(v is None for v in r):  # a BLOB_SCHEMA column the file lacks
+            raise BlobError(f"{checkpoint_dir} holds a row that is not a sketch blob")
+        if r.part_id not in best or r.wall_ms < best[r.part_id].wall_ms:
+            best[r.part_id] = r
+    return best
+
+
 def build_sketch_checkpointed(
     df: DataFrame,
     zero_fn: Callable[[], MergeableSketch],
@@ -191,61 +214,37 @@ def build_sketch_checkpointed(
 ) -> tuple[MergeableSketch, list[dict]]:
     """Resumable path: rows are hashed into stable buckets, one sketch blob is
     built and persisted per bucket, and completed buckets are skipped on
-    re-run.  Costs one shuffle (groupBy bucket) — the price of bucket-atomic
-    checkpoints; use build_sketch_distributed when resumability isn't needed.
+    re-run.  Costs one exchange pinned at n_buckets partitions — the price of
+    bucket-atomic checkpoints — plus one blob read before the write and one
+    after it if anything was written; the blobs end in `merge_blobs`.  Each
+    metrics row's `reused` says whether its blob came from checkpoint_dir.
     """
     spark = df.sparkSession
-    done: set[int] = set()
-    try:
-        existing = spark.read.parquet(checkpoint_dir)
-        done = {r.part_id for r in existing.select("part_id").distinct().collect()}
-    except Exception:
-        existing = None
-
+    done = _read_checkpoint(spark, checkpoint_dir)
+    missing = set(range(n_buckets)) - done.keys()
     bucketed = df.withColumn(
         "__bucket", F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_buckets)).cast("int")
     )
-    todo = bucketed.filter(~F.col("__bucket").isin(*done)) if done else bucketed
+    todo = bucketed.filter(F.col("__bucket").isin(*missing)) if done else bucketed
 
     def fn(key: tuple, table: pa.Table) -> pa.Table:
-        t0 = time.monotonic()
-        sk = zero_fn()
-        stats = {"n_rows": 0, "n_tokens": 0, "n_updates": 0}
-        for b in table.drop_columns(["__bucket"]).to_batches():
-            update_fn(sk, b, stats)
-        return pa.table(
-            {
-                "part_id": [int(key[0].as_py())],
-                "sketch": [sk.to_bytes()],
-                "n_rows": [stats["n_rows"]],
-                "n_tokens": [stats["n_tokens"]],
-                "n_updates": [stats["n_updates"]],
-                "wall_ms": [(time.monotonic() - t0) * 1000.0],
-            },
-            schema=_BLOB_ARROW_SCHEMA,
-        )
+        batches = table.drop_columns(["__bucket"]).to_batches()
+        return pa.Table.from_batches([_build_blob(key[0].as_py(), batches, zero_fn, update_fn)])
 
-    if todo.limit(1).count() > 0:
-        todo.groupBy("__bucket").applyInArrow(fn, BLOB_SCHEMA).write.mode("append").parquet(
-            checkpoint_dir
-        )
-
-    all_blobs = spark.read.parquet(checkpoint_dir)
-    # dedupe defensively: a re-run appends identical blobs for a bucket;
-    # keeping one per bucket keeps the merge exact.
-    rows = (
-        all_blobs.withColumn(
-            "__rn",
-            F.row_number().over(Window.partitionBy("part_id").orderBy("wall_ms")),
-        )
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .collect()
-    )
-    if not rows:
-        return zero_fn(), []
-    sk = from_bytes(bytes(rows[0].sketch))
-    for r in rows[1:]:
-        sk = sk.merge(from_bytes(bytes(r.sketch)))
-    metrics = [{k: v for k, v in r.asDict().items() if k != "sketch"} for r in rows]
+    blobs = done
+    # The partition count MUST be pinned: the exchange carries few rows, so
+    # AQE would coalesce it to one partition and build every bucket serially
+    # in one task (measured: the bucket stage ran 1 task until pinned).
+    # groupBy reuses this hash partitioning: the plan keeps one Exchange.
+    if missing and (not done or todo.limit(1).count() > 0):
+        todo.repartition(n_buckets, "__bucket").groupBy("__bucket").applyInArrow(
+            fn, BLOB_SCHEMA
+        ).write.mode("append").parquet(checkpoint_dir)
+        blobs = _read_checkpoint(spark, checkpoint_dir)
+    rows = [blobs[b] for b in sorted(blobs)]
+    sk = merge_blobs([bytes(r.sketch) for r in rows], zero_fn)
+    metrics = [
+        {**{k: v for k, v in r.asDict().items() if k != "sketch"}, "reused": r.part_id in done}
+        for r in rows
+    ]
     return sk, metrics

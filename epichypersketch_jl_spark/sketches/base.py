@@ -19,6 +19,8 @@ from __future__ import annotations
 import struct
 from typing import ClassVar
 
+from ..errors import BlobError
+
 _MAGIC = b"EHS1"
 _REGISTRY: dict[bytes, type] = {}
 
@@ -53,12 +55,24 @@ class MergeableSketch:
         return self.merge(other)
 
 
-def from_bytes(blob: bytes) -> MergeableSketch:
-    if blob[:4] != _MAGIC:
-        raise ValueError("not an EHS sketch blob")
-    tag = blob[4:8]
+def _unframe(blob: bytes, tag: bytes | None = None) -> tuple[type, bytes]:
+    """The one frame check every blob parser goes through: magic, a
+    registered tag (equal to `tag` when given) and a declared payload length
+    equal to the bytes that follow the 16-byte header, so a truncated or
+    padded blob raises instead of decoding to a plausible sketch.
+    Returns (sketch class, payload)."""
+    if len(blob) < 16 or blob[:4] != _MAGIC:
+        raise BlobError("not an EHS sketch blob")
+    got = bytes(blob[4:8])
+    cls = _REGISTRY.get(got)
+    if cls is None or (tag is not None and got != tag):
+        raise BlobError(f"unexpected sketch tag {got!r}")
     (n,) = struct.unpack("<q", blob[8:16])
-    cls = _REGISTRY.get(tag)
-    if cls is None:
-        raise ValueError(f"unknown sketch tag {tag!r}")
-    return cls._from_payload(blob[16 : 16 + n])
+    if n != len(blob) - 16:
+        raise BlobError(f"blob declares {n} payload bytes but carries {len(blob) - 16}")
+    return cls, blob[16:]
+
+
+def from_bytes(blob: bytes) -> MergeableSketch:
+    cls, payload = _unframe(blob)
+    return cls._from_payload(payload)

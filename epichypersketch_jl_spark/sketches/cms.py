@@ -397,12 +397,9 @@ class CountMinSketch(MergeableSketch):
         return self
 
     def _blob_payload(self, blob: bytes) -> bytes:
-        from .base import _MAGIC
+        from .base import _unframe
 
-        if blob[:4] != _MAGIC or blob[4:8] != self.TAG:
-            raise ValueError("not a CMS blob")
-        (n,) = struct.unpack("<q", blob[8:16])
-        return blob[16 : 16 + n]
+        return _unframe(blob, self.TAG)[1]
 
     def _check_blob_header(self, payload: bytes) -> tuple[int, int]:
         """Validate a CMS payload header against self; returns

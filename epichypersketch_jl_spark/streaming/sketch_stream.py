@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 from ..config import HyperSketchConfig
 from ..functions.motif_kernels import make_cms
 from ..operators.motif import _is_conv, _make_update_fn, _prepared
-from ..operators.sketch_build import BLOB_SCHEMA, _make_build_fn
-from ..sketches.base import from_bytes
+from ..operators.sketch_build import BLOB_SCHEMA, _make_build_fn, merge_blobs
 from ..sketches.cms import CountMinSketch
 
 
@@ -96,12 +95,7 @@ class StreamingAnySketchJob:
             )
         except AnalysisException:  # PATH_NOT_FOUND before the first commit
             return self.zero_fn()
-        if not rows:
-            return self.zero_fn()
-        sk = from_bytes(bytes(rows[0].sketch))
-        for r in rows[1:]:
-            sk = sk.merge(from_bytes(bytes(r.sketch)))
-        return sk
+        return merge_blobs([bytes(r.sketch) for r in rows], self.zero_fn)
 
 
 class StreamingSketchJob(StreamingAnySketchJob):

@@ -7,7 +7,7 @@ merge algebra (associativity, commutativity, identity, chunking invariance).
 import numpy as np
 import pytest
 
-from epichypersketch_jl_spark.errors import MergeError
+from epichypersketch_jl_spark.errors import BlobError, MergeError
 from epichypersketch_jl_spark.sketches import (
     BloomFilter,
     CountMinSketch,
@@ -544,3 +544,41 @@ class TestFrequentDirections:
         c.update_batch(np.ones((3, 4)))
         with _pt.raises(ValueError):
             c.update_batch(np.ones((3, 5)))
+
+
+# ------------------------------------------------------------ blob framing
+def _framing_sketches():
+    rng = np.random.default_rng(11)
+    cms = CountMinSketch(delta=0.01, epsilon=0.01, key_width=2, seed=3)
+    cms.update_batch(rng.integers(1, 50, size=(500, 2)))
+    hll = HyperLogLog(p=10, seed=3)
+    hll.update_batch(rng.integers(0, 10**6, size=1000))
+    kll = KLL(k=64, seed=3)
+    kll.update_batch(rng.random(2000))
+    return {"cms": cms, "hll": hll, "kll": kll}
+
+
+def _misframe(blob: bytes, damage: str) -> bytes:
+    return blob[:-1] if damage == "truncated" else blob + b"\0"
+
+
+class TestBlobFraming:
+    """The frame's declared payload length must match the bytes present: a
+    truncated or padded blob raises BlobError instead of decoding."""
+
+    @pytest.mark.parametrize("damage", ["truncated", "padded"])
+    @pytest.mark.parametrize("name", ["cms", "hll", "kll"])
+    def test_from_bytes_rejects_misframed_blob(self, name, damage):
+        sk = _framing_sketches()[name]
+        blob = sk.to_bytes()
+        assert from_bytes(blob).to_bytes() == blob
+        with pytest.raises(BlobError):
+            from_bytes(_misframe(blob, damage))
+
+    @pytest.mark.parametrize("damage", ["truncated", "padded"])
+    def test_merge_blobs_inplace_rejects_misframed_blob(self, damage):
+        cms = _framing_sketches()["cms"]
+        blob = cms.to_bytes()
+        acc = CountMinSketch(delta=0.01, epsilon=0.01, key_width=2, seed=3)
+        with pytest.raises(BlobError):
+            acc.merge_blobs_inplace([blob, _misframe(blob, damage)])
